@@ -250,12 +250,9 @@ class SparqlEndpoint:
                 endpoint answers errors, never drops the connection)."""
                 try:
                     with ep._update_lock:
-                        # localCheckpoint RETURNS the pinned frame — assign
-                        # it, or the snapshot keeps the full lazy plan (and
-                        # every update stacks another plan layer on top)
-                        ep.triples = sparql_update(ep.triples, update_text).localCheckpoint(
-                            eager=True
-                        )
+                        # sparql_update returns an eagerly checkpointed
+                        # snapshot, so updates never stack plan layers
+                        ep.triples = sparql_update(ep.triples, update_text)
                 except SyntaxError as exc:
                     self.send_error(400, str(exc)[:500])
                     return

@@ -11,8 +11,11 @@ from __future__ import annotations
 
 from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def _shared_vars(left: DataFrame, right: DataFrame) -> list[str]:
@@ -327,10 +330,27 @@ def union_bag(left: DataFrame, right: DataFrame) -> DataFrame:
     return left.unionByName(right, allowMissingColumns=True)
 
 
-def values_table(spark, rows: list[tuple], schema: str) -> DataFrame:
+def values_table(spark, rows: list[tuple], schema: str | StructType) -> DataFrame:
     """BindingSetAssignment (VALUES): inline table (HTEE:1106-1145);
-    merging with incoming bindings is values_join."""
-    return spark.createDataFrame(rows, schema)
+    merging with incoming bindings is values_join.
+
+    Every inline frame the query side builds (VALUES, INSERT/DELETE DATA,
+    path seeds, DESCRIBE constants) goes through here.  The rows reach
+    Spark as one Arrow table, which plans as a LocalTableScan with exact
+    size statistics, so Catalyst can broadcast it into a join.
+    ``createDataFrame(list_of_tuples, ddl)`` would instead parallelize
+    them into an RDD scan with no statistics, which never broadcasts and
+    made a VALUES join against the store a CartesianProduct.  NULL cells
+    are UNDEF / the default graph.  A zero-column table (``VALUES () {
+    () }``) is built over a placeholder column and projected away: an
+    Arrow batch without columns reaches Spark with no rows."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    if not struct.fields:
+        return values_table(spark, [(None,)] * len(rows), "unit string").select()
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, row)) for row in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def values_join(left: DataFrame, vals: DataFrame) -> DataFrame:

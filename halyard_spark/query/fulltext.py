@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from halyard_spark import nt
+from halyard_spark.query.algebra import values_table
 
 SEARCH_DATATYPE = nt.NS + "search"  # mirrors halyard:search (HALYARD.java:56)
 
@@ -67,7 +68,8 @@ def search_literals(triples: DataFrame, patterns_df: DataFrame) -> DataFrame:
     qid_type = patterns_df.schema["query_id"].dataType
     queries = [(r["query_id"], r["query"]) for r in patterns_df.collect()]
     if not queries:
-        return patterns_df.sparkSession.createDataFrame(
+        return values_table(
+            patterns_df.sparkSession,
             [],
             StructType(
                 [StructField("query_id", qid_type)]

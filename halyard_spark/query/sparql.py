@@ -1376,6 +1376,10 @@ class _Planner:
         schema = ", ".join(f"{v} string" for v in vars_)
         return A.values_table(self.spark, rows, schema)
 
+    def _seed(self, term) -> DataFrame:
+        """One-row BFS seed frame for a bound path endpoint."""
+        return A.values_table(self.spark, [(_Parser.term_lexical(term),)], "src string")
+
     def _scoped(self) -> DataFrame:
         """The store narrowed to the current GRAPH scope and the query's
         RDF dataset.  No scope + no dataset = all contexts (the
@@ -1665,14 +1669,14 @@ class _Planner:
             # both endpoints bound (the ASK shape): BFS from the source,
             # keep at most the one matching pair; the zero-column result
             # acts as an EXISTS gate under bgp_join's cross product
-            seeds = self.spark.createDataFrame([(_Parser.term_lexical(s),)], "src string")
+            seeds = self._seed(s)
             if mod == "?":
                 pairs = PATH.reachable_from(edges, seeds, min_length=0, max_length=1)
             else:
                 pairs = PATH.reachable_from(edges, seeds, min_length=min_length)
             return pairs.where(F.col("dst") == _Parser.term_lexical(o)).limit(1).select()
         if not s_var:  # bound source
-            seeds = self.spark.createDataFrame([(_Parser.term_lexical(s),)], "src string")
+            seeds = self._seed(s)
             if mod == "?":
                 pairs = PATH.reachable_from(edges, seeds, min_length=0, max_length=1)
             else:
@@ -1680,7 +1684,7 @@ class _Planner:
             return pairs.select(F.col("dst").alias(o[1]))
         # bound object: BFS over reversed edges seeded from the object
         rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        seeds = self.spark.createDataFrame([(_Parser.term_lexical(o),)], "src string")
+        seeds = self._seed(o)
         if mod == "?":
             pairs = PATH.reachable_from(rev, seeds, min_length=0, max_length=1)
         else:
@@ -2633,7 +2637,7 @@ def sparql_query(
         spark = triples.sparkSession
         const_nodes = [_Parser.term_lexical(t) for t in q.describe_terms if t[0] != "var"]
         nodes = (
-            spark.createDataFrame([(n,) for n in const_nodes], "node string")
+            A.values_table(spark, [(n,) for n in const_nodes], "node string")
             if const_nodes
             else None
         )
@@ -3004,7 +3008,12 @@ def sparql_update(triples: DataFrame, update: str, base: str | None = None) -> D
     target named graphs; a template triple without a graph lands in the
     default graph (ctx NULL) on insert, and on delete matches the
     statement in ANY graph (the store resolves the actual quads — the
-    union-graph read the reference performs with no dataset bound)."""
+    union-graph read the reference performs with no dataset bound).
+
+    The returned snapshot is already pinned: bulk_update ends every stage
+    with ``localCheckpoint(eager=True)``, so callers that keep it (the
+    endpoint) need no checkpoint of their own.  An update with no
+    operations returns ``triples`` itself."""
     from halyard_spark.pipeline.update import bulk_update
 
     parser = _Parser(tokenize(update), base=base)
@@ -3020,7 +3029,7 @@ def sparql_update(triples: DataFrame, update: str, base: str | None = None) -> D
                 _Parser.term_lexical(s), _Parser.term_lexical(p), _Parser.term_lexical(o),
                 _Parser.term_lexical(ctx) if ctx is not None else None,
             ))
-        return spark.createDataFrame(rows, "subj string, pred string, obj string, ctx string")
+        return A.values_table(spark, rows, "subj string, pred string, obj string, ctx string")
 
     def _ctx_cond(spec):
         if spec[0] == "default":

@@ -18,6 +18,20 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory (MemTotal in /proc/meminfo).  The driver
+    heap must fit the host: a fixed 64g let G1 grow past physical memory
+    and abort the JVM mid-run on a 15 GB machine."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"
+    except OSError:
+        pass
+    return "4g"
+
+
 def _local_dir() -> str:
     shm = "/dev/shm/spark-local"
     try:
@@ -102,7 +116,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config(
+            "spark.driver.memory",
+            driver_memory
+            or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from halyard_spark.session import get_spark
@@ -7,7 +9,8 @@ from halyard_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cpus=8, app_name="halyard_spark_tests", shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    s = get_spark(cpus=cpus, app_name="halyard_spark_tests", shuffle_partitions=8)
     yield s
 
 

@@ -275,20 +275,31 @@ def test_endpoint_result_format_negotiation(spark):
         ep.stop()
 
 
+def _assert_pinned(df) -> None:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    # a pinned snapshot is a LogicalRDD/checkpoint scan, not a stack of
+    # unions over the original frame
+    assert "LogicalRDD" in plan or "Checkpoint" in plan, plan
+    assert plan.count("Union") == 0, plan
+
+
 def test_endpoint_update_snapshot_is_pinned(spark):
     """After an update the endpoint snapshot must be the CHECKPOINTED
-    frame (localCheckpoint returns a new DataFrame): the plan must not
-    stack update history, and deleting a LOADed source file must not
-    break later queries (code-review regression)."""
+    frame: the plan must not stack update history, and deleting a LOADed
+    source file must not break later queries (code-review regression).
+    sparql_update itself returns that frame, so the endpoint pins each
+    update once."""
     import urllib.request
 
     from halyard_spark import nt
     from halyard_spark.endpoint import SparqlEndpoint
+    from halyard_spark.query.sparql import sparql_update
 
     g = spark.createDataFrame(
         [("<urn:a>", "<urn:p>", nt.lit("v"), None)],
         "subj string, pred string, obj string, ctx string",
     )
+    _assert_pinned(sparql_update(g, 'INSERT DATA { <urn:n> <urn:p> "x" }'))
     ep = SparqlEndpoint(g).start()
     try:
         for i in range(3):
@@ -300,11 +311,7 @@ def test_endpoint_update_snapshot_is_pinned(spark):
             )
             with urllib.request.urlopen(req) as resp:
                 assert resp.status == 204
-        plan = ep.triples._jdf.queryExecution().optimizedPlan().toString()
-        # a pinned snapshot is a LogicalRDD/checkpoint scan, not a stack
-        # of three unions over the original frame
-        assert "LogicalRDD" in plan or "Checkpoint" in plan, plan
-        assert plan.count("Union") == 0, plan
+        _assert_pinned(ep.triples)
         assert ep.triples.count() == 4
     finally:
         ep.stop()

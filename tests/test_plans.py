@@ -165,3 +165,64 @@ def test_summary_decimation_single_factor(spark):
     assert sampled["class"] == 200  # classes stay exact
     # unbiased: ~200 within sampling noise, NOT ~50 (the 1/d^2 bug)
     assert 100 <= sampled["domain"] <= 320, sampled
+
+
+def _assert_local_leaf(df) -> None:
+    """An inline frame must plan as a local relation, not as an RDD scan
+    or under a Cartesian product."""
+    plan = _plan(df)
+    assert "LocalTableScan" in plan, plan
+    assert "Scan ExistingRDD" not in plan and "CartesianProduct" not in plan, plan
+
+
+def test_values_undef_join_plans_local_relation(spark, store):
+    """A VALUES/UNDEF read against the store joins a LocalTableScan: the
+    inline rows carry exact statistics, so the compatibility join
+    broadcasts them instead of planning a CartesianProduct over an RDD
+    scan."""
+    from halyard_spark.query.sparql import sparql_query
+
+    spo = materialize.read_index(spark, f"{store}/store", "spo")
+    out = sparql_query(
+        spo,
+        "SELECT ?s ?p ?o WHERE { VALUES (?s ?p) { (<a> <p>) (<b> UNDEF) } ?s ?p ?o }",
+    )
+    _assert_local_leaf(out)
+
+
+def test_update_data_frames_plan_local_relation(spark, store, monkeypatch):
+    """The quads of INSERT DATA and DELETE DATA reach bulk_update as
+    LocalTableScans (one small local relation per update, no extra jobs)."""
+    from halyard_spark.pipeline import update as U
+    from halyard_spark.query.sparql import sparql_update
+
+    spo = materialize.read_index(spark, f"{store}/store", "spo")
+    stages = []
+    monkeypatch.setattr(U, "bulk_update", lambda triples, st: stages.extend(st) or triples)
+    data = '<urn:a> <urn:p> "x" . GRAPH <urn:g> { <urn:b> <urn:p> <urn:c> }'
+    sparql_update(spo, f"INSERT DATA {{ {data} }} ; DELETE DATA {{ {data} }}")
+    (deletes0, inserts), (deletes, inserts1) = (stage(spo) for stage in stages)
+    assert deletes0 is None and inserts1 is None
+    _assert_local_leaf(inserts)
+    _assert_local_leaf(deletes)
+
+
+def test_path_seed_plans_local_relation(spark, store, monkeypatch):
+    """The seed of a bound-source `p+` BFS is a one-row LocalTableScan."""
+    from halyard_spark.query import path as PATH
+    from halyard_spark.query.sparql import sparql_query
+
+    spo = materialize.read_index(spark, f"{store}/store", "spo")
+    s = spo.where(F.col("pred") == "<urn:p:imports>").first()["subj"]
+    seeds = []
+    real = PATH.reachable_from
+
+    def spy(edges, sources, **kw):
+        seeds.append(sources)
+        return real(edges, sources, **kw)
+
+    monkeypatch.setattr(PATH, "reachable_from", spy)
+    sparql_query(spo, f"SELECT ?o WHERE {{ {s} <urn:p:imports>+ ?o }}")
+    (seed,) = seeds
+    _assert_local_leaf(seed)
+    assert [r.src for r in seed.collect()] == [s]

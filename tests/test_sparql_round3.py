@@ -343,6 +343,37 @@ def test_values_undef_fills_from_values_side(spark, tree):
     ])
 
 
+def test_values_empty_block_has_no_solutions(spark, tree):
+    out = sparql_query(tree, "SELECT ?x WHERE { VALUES ?x {} }")
+    assert out.columns == ["x"] and out.count() == 0
+    joined = sparql_query(tree, PREFIXES + """
+        SELECT ?s WHERE { ?s ex:name ?n . VALUES ?n {} }""")
+    assert joined.count() == 0
+
+
+def test_values_zero_columns_is_unit_solution(spark, tree):
+    """`VALUES () { () }` is one empty solution per data row: it leaves a
+    join unchanged, and a block with no rows empties it."""
+    assert rows(sparql_query(tree, "SELECT * WHERE { VALUES () { () } }")) == [()]
+    assert sparql_query(tree, "SELECT * WHERE { VALUES () { () () } }").count() == 2
+    names = PREFIXES + "SELECT ?s WHERE { ?s ex:name ?n . VALUES () { %s } }"
+    assert len(rows(sparql_query(tree, names % "()"))) == 4
+    assert rows(sparql_query(tree, names % "")) == []
+
+
+def test_data_in_default_graph_round_trips(spark, quads):
+    """An INSERT DATA quad without GRAPH lands in the default graph (ctx
+    NULL), reads back, and the matching DELETE DATA removes it."""
+    data = PREFIXES + '%s DATA { ex:zed ex:name "Zed" }'
+    ins = sparql_update(quads, data % "INSERT")
+    got = ins.where(ins.subj == nt.iri(EX + "zed")).collect()
+    assert [(r.obj, r.ctx) for r in got] == [(nt.lit("Zed"), None)]
+    out = sparql_query(ins, PREFIXES + "SELECT ?n WHERE { ex:zed ex:name ?n }")
+    assert rows(out) == [(nt.lit("Zed"),)]
+    deleted = sparql_update(ins, data % "DELETE")
+    assert rows(deleted) == rows(quads)
+
+
 # ----------------------------------------------------------------- HAVING
 
 def test_having_aggregate_on_right(spark, tree):

@@ -72,6 +72,18 @@ def test_values_compatibility_join(spark):
     assert len(rows) == 1 and rows[0].y == "p" and rows[0].z == "extra"
 
 
+def test_values_table_shapes(spark):
+    """values_table keeps zero rows, zero columns (one empty row per data
+    row), NULL cells and non-string DDL types."""
+    empty = A.values_table(spark, [], "x string")
+    assert empty.columns == ["x"] and empty.count() == 0
+    unit = A.values_table(spark, [(), (), ()], "")
+    assert unit.columns == [] and unit.count() == 3
+    mixed = A.values_table(spark, [(1, None), (None, "b")], "x int, z string")
+    assert dict(mixed.dtypes) == {"x": "int", "z": "string"}
+    assert sorted(map(tuple, mixed.collect()), key=str) == [(1, None), (None, "b")]
+
+
 def test_sparql_order_key_type_ranking(spark):
     """ORDER BY over mixed terms: bnode < IRI < literal, numerics by value
     (ValueComparator semantics)."""
